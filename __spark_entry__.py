@@ -65,7 +65,6 @@ from marginaliasearch_spark.operators.query_exec import (
     IndexReader,
     RankingParams,
     run_query,
-    run_query_wand,
 )
 from marginaliasearch_spark.plans.expansion import (
     NGRAM_MIN_COUNT as _NGRAM_MIN_COUNT,
@@ -665,70 +664,16 @@ def _search_decorated(
 
 # F5 conv:/-conv: doc-range retain/reject — an explicit conversation-id
 # set (literal on BOTH sides so the oracle is sf-agnostic: ids absent at a
-# smaller sf simply match nothing on either side)
+# smaller sf simply match nothing on either side). ``conv:`` tokens seed the
+# candidate decode with the conversations' doc ids (resolved through
+# doc_stats), ``-conv:`` subtracts ids post-hoc — df/N statistics stay
+# whole-corpus, mirroring QueryParser.java:220 conv tokens feeding
+# SearchQuery's doc-range retain/reject filters.
 _CONV_RETAIN = tuple(range(3, 61, 3))
 _CONV_REJECT = (12, 27)
-
-
-def _search_conv(base: str, k: int = _K) -> Callable[[SparkSession, str], DataFrame]:
-    """Doc-range retain/reject (F5): ``conv:`` tokens seed the candidate
-    decode with an explicit conversation-id set resolved through doc_stats
-    (query_exec conv_doc_ids), ``-conv:`` subtracts ids post-hoc
-    (convs_exclude) — df/N statistics stay whole-corpus, mirroring
-    QueryParser.java:220 conv tokens feeding SearchQuery's doc-range
-    retain/reject filters (reference: SearchIndex retain/reject by range)."""
-    toks = " ".join(f"conv:{i}" for i in _CONV_RETAIN)
-    negs = " ".join(f"-conv:{i}" for i in _CONV_REJECT)
-    query = f"{base} {toks} {negs}"
-
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        reader = _get_reader(spark, sf_dir)
-        res = run_query(
-            reader,
-            query,
-            k=k,
-            round_score_to=6,
-            tie_break=F.col("conv_id").cast("long"),
-        )
-        return res.select(F.col("conv_id").cast("long").alias("doc_id"), "score")
-
-    return fn
-
-
-def _search_wand(query: str, k: int = _K) -> Callable[[SparkSession, str], DataFrame]:
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        reader = _get_reader(spark, sf_dir)
-        res = run_query_wand(
-            reader,
-            query,
-            k=k,
-            round_score_to=6,
-            tie_break=F.col("conv_id").cast("long"),
-        )
-        return res.select(F.col("conv_id").cast("long").alias("doc_id"), "score")
-
-    return fn
-
-
-def _search_qs(query: str, k: int = _K) -> Callable[[SparkSession, str], DataFrame]:
-    """Strategy-dispatching search — the query string carries a ``qs=``
-    execution-strategy override (QueryParser.java:238 QsTerm →
-    QueryFactory.parseQueryStrategy) routed through ``run_search``."""
-
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from marginaliasearch_spark.operators.query_exec import run_search
-
-        reader = _get_reader(spark, sf_dir)
-        res = run_search(
-            reader,
-            query,
-            k=k,
-            round_score_to=6,
-            tie_break=F.col("conv_id").cast("long"),
-        )
-        return res.select(F.col("conv_id").cast("long").alias("doc_id"), "score")
-
-    return fn
+_CONV_TOKENS = " ".join(
+    [f"conv:{i}" for i in _CONV_RETAIN] + [f"-conv:{i}" for i in _CONV_REJECT]
+)
 
 
 # role of a document = doc_id % 4 (documents_as_transcripts):
@@ -2820,15 +2765,22 @@ def _recorded_entries(record_dir: str | None = None) -> set[str]:
     lands, round N+1's import automatically leads with what it missed."""
     import glob as _glob
     import json as _json
+    import re as _re
 
     here = record_dir or os.path.dirname(os.path.abspath(__file__))
     # LATEST round wins per entry: an entry green in r03 but red in a
     # later round must RE-ENTER the never-recorded lead — a
     # union-of-greens would retire a since-regressed entry on the
     # strength of the stale green row (the rotation bug, one step
-    # removed). Files sort r01 < r02 < …, so later records override.
+    # removed). Files sort by round NUMBER (r99 < r100, which a filename
+    # sort gets wrong), so later records override.
+    def _round(p: str) -> int:
+        m = _re.search(r"CORRECTNESS_r(\d+)\.json$", p)
+        return int(m.group(1)) if m else -1
+
     latest: dict[str, bool] = {}
-    for p in sorted(_glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
+    records = _glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))
+    for p in sorted(records, key=_round):
         try:
             with open(p) as f:
                 rec = _json.load(f)
@@ -2913,11 +2865,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # block-max WAND two-phase top-k (exact; same oracle as plain BM25);
         # the AND shape exercises the residual per-term cut on every leg of
         # the intersection (SkipListReader block-max retain analogue)
-        "fulltext_wand": _search_wand("query -slow"),
-        "fulltext_wand_and": _search_wand("spark join -dup"),
+        "fulltext_wand": _search("query -slow qs=wand"),
+        "fulltext_wand_and": _search("spark join -dup qs=wand"),
         # mixed AND-of-OR (the expansion engine's default output shape):
         # per-path residual cuts pushed on EVERY term's scan
-        "fulltext_wand_or_and": _search_wand("( stream | vector ) scan"),
+        "fulltext_wand_or_and": _search("( stream | vector ) scan qs=wand"),
         # role gates (F8): driver docs cycle roles by doc_id % 4 (the
         # transcripts adapter), so in:user selects the %4==2 class and a
         # two-role gate is unsatisfiable on single-turn docs
@@ -2928,10 +2880,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # same oracle as the plain shape); qs=rf_user is the
         # REQUIRE_FIELD_* analogue — folded into the role gate, so it
         # shares fulltext_gate_pass's oracle
-        "fulltext_qs_wand": _search_qs("spark join -dup qs=topic"),
-        "fulltext_qs_gate": _search_qs("spark join qs=rf_user"),
+        "fulltext_qs_wand": _search("spark join -dup qs=topic"),
+        "fulltext_qs_gate": _search("spark join qs=rf_user"),
         # conv:/-conv: doc-range retain/reject (F5)
-        "fulltext_conv": _search_conv("scan"),
+        "fulltext_conv": _search(f"scan {_CONV_TOKENS}"),
         # flag-BM25 (score_bFlags) + document penalties (normalize's
         # penalty argument) — reference ranking features over role flags
         # and the quality-derived rank bucket

@@ -14,7 +14,7 @@ ts timestamp)``; a *document* is one conversation with turns concatenated in
 Package layout
 --------------
 - ``functions/``  tokenization, hashing, codecs, scoring math
-- ``sources/``    table catalog (parquet now, Iceberg-ready), datagen, journal IO
+- ``sources/``    transcript corpus generators and adapters
 - ``plans/``      query parsing / compiled-query tree / physical planning
 - ``operators/``  index construction, query execution, dedup/ANN/text-analysis
 - ``streaming/``  incremental (Structured Streaming) ingestion

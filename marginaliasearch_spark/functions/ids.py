@@ -35,12 +35,6 @@ def doc_id_for_conv(conv_id: Column | str, rank: Column | int = 0) -> Column:
     return (F.shiftleft(r.cast("long"), HASH_BITS) + hashed).alias("doc_id")
 
 
-def remove_rank(doc_id: Column | str) -> Column:
-    """Strip the rank bits (cf. ``UrlIdCodec.removeRank``, :90-92)."""
-    c = F.col(doc_id) if isinstance(doc_id, str) else doc_id
-    return c.bitwiseAND(F.lit(HASH_MASK))
-
-
 def term_id_expr(term: Column | str) -> Column:
     """term → 64-bit id via Spark's JVM-side xxhash64.
 

@@ -31,7 +31,6 @@ Two tokenizer modes:
 from __future__ import annotations
 
 import re
-import unicodedata
 
 import numpy as np
 import pandas as pd
@@ -103,18 +102,3 @@ def assign_positions(tokens: list[str]) -> tuple[list[str], np.ndarray, int]:
     keep = ~is_break & ~is_stop & (lengths <= MAX_WORD_LENGTH) & (lengths > 0)
     doc_len = int((~is_break).sum())
     return arr[keep].tolist(), positions[keep], doc_len
-
-
-def simple_tokenize_sql(text_expr: str = "lower(text)") -> str:
-    """DuckDB-SQL fragment producing the simple tokenizer's token list."""
-    return (
-        f"list_filter(regexp_split_to_array({text_expr}, '{SIMPLE_SPLIT_RE}'), "
-        f"t -> t <> '' AND length(t) < {MAX_RAW_TOKEN_LENGTH})"
-    )
-
-
-def strip_accents(text: str) -> str:
-    """Helper used by tests: NFKD → drop combining marks."""
-    return "".join(
-        c for c in unicodedata.normalize("NFKD", text) if not unicodedata.combining(c)
-    )

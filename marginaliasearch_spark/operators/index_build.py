@@ -103,16 +103,6 @@ def _stem_lexicon(batches):
         yield pdf
 
 
-_TIMING = os.environ.get("MSQ_BUILD_TIMING", "") == "1"
-
-
-def _mark(t0: float, label: str) -> float:
-    now = time.time()
-    if _TIMING:
-        print(f"[build_index] {label}: {now - t0:.1f}s", flush=True)
-    return now
-
-
 def build_index(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -141,7 +131,6 @@ def build_index(
     # tokenize+assembly shuffle is paid once and survives a crash; on a
     # cluster this is an Iceberg staging table / snapshot). The _SUCCESS
     # marker parquet leaves behind is the commit record.
-    tmark = time.time()
     journal_done = os.path.exists(os.path.join(paths.journal, "_SUCCESS"))
     if not journal_done:
         shutil.rmtree(paths.journal, ignore_errors=True)  # clear torn write
@@ -149,7 +138,6 @@ def build_index(
             "overwrite"
         ).parquet(paths.journal)
     journal = spark.read.parquet(paths.journal)
-    tmark = _mark(tmark, "journal")
 
     # Step 1 — forward index + lexicon + corpus stats
     stats_done = os.path.exists(paths.corpus_stats)
@@ -204,7 +192,6 @@ def build_index(
                 "lang_doc_counts": {r["lang"]: r["cnt"] for r in lang_rows},
             },
         )
-    tmark = _mark(tmark, "stats")
     # Step 2 — postings buckets (independently committed lineage units)
     lexicon_df = spark.read.parquet(paths.lexicon).select("term_id")
     terms = journal.filter(F.col("term").isNotNull())
@@ -265,7 +252,6 @@ def build_index(
                 "status": "committed",
             },
         )
-        tmark = _mark(tmark, f"bucket {b}")
         committed += 1
         if fail_after_bucket is not None and committed >= fail_after_bucket:
             raise RuntimeError(f"injected failure after {committed} buckets")
@@ -312,7 +298,6 @@ def build_index(
             .partitionBy("lang")
             .parquet(paths.prio)
         )
-    tmark = _mark(tmark, "prio tier")
 
     # Step 3 — per-term score bounds for block-max WAND pruning: the global
     # max tf-norm per term (score ub = idf * max_tf_norm). Tiny aggregation
@@ -323,7 +308,6 @@ def build_index(
             F.max("max_tf_norm").alias("max_tf_norm"),
             F.count("*").alias("n_blocks"),
         ).coalesce(1).write.mode("overwrite").parquet(paths.term_bounds)
-    tmark = _mark(tmark, "term_bounds")
     return paths
 
 

@@ -1,27 +1,39 @@
 """Query execution: top-k BM25 over the block-compressed postings tables.
 
-Re-expresses the reference's 4-stage query pipeline
+One executor, in the shape of the reference's 4-stage pipeline
 (``IndexQueryExecution.java:118-210``: Lookup → Deduplicate → Preparation →
-Ranking) as one DataFrame DAG:
+Ranking), whose physical plan ``CombinedIndexReader.createQueries`` fixes
+before anything runs:
 
-- **plan** (driver, = ``SearchContext`` + ``CombinedIndexReader.createQueries``):
-  look up per-term document frequencies in the lexicon, order include terms
-  rarest-first (``CombinedIndexReader.java:94-97,119-130`` — selectivity
-  ordering is OURS to do; Catalyst cannot reorder a semi-join chain);
-- **lookup** (= EntrySource + ReverseIndexRetainFilter): decode the rarest
-  term's posting blocks into candidates, then for each further term decode
-  *pruned* blocks — the candidate doc-id set is shipped to executors and
-  blocks whose [min_doc, max_doc] window misses all candidates are skipped
-  undecoded (skip-list forward pointers; ``SkipListReader.tryRetainData``);
-- **exclusion** (= ReverseIndexRejectFilter): ``left_anti`` join;
-- **ranking**: per-term BM25 partials as JVM column expressions, aggregated
-  over the compiled query's OR-tree as max-over-paths of sum-along-path
-  (``CompiledQueryAggregates.intMaxSumAggregateOfIndexes``), then the
-  ascending ``normalize()`` transform (``IndexResultRankingService.java``);
-- **select**: ``orderBy(score).limit(k)`` (Spark's TakeOrdered = the top-k
-  heap, ``ResultPriorityQueue``) with an optional per-group result cap
-  (``row_number`` window = per-domain cap, ``IndexQueryExecution.java:162-177``).
+- **plan_query** (driver, = ``SearchContext`` + ``createQueries``): parse,
+  probe the lexicon for per-term document frequencies (and N, per language
+  when lang-scoped), keep the OR-paths whose terms all exist and order each
+  one's terms rarest-first (``CombinedIndexReader.java:94-97,119-130`` —
+  selectivity ordering is OURS to do; Catalyst cannot reorder a semi-join
+  chain), resolve role gates and ``conv:``/``set:`` ids, and choose the
+  strategy, recording why. The result is a ``QueryPlan``.
+- **execute** turns a plan into one DataFrame DAG:
+  - *lookup* (= EntrySource + ReverseIndexRetainFilter): decode the rarest
+    term's posting blocks into candidates, then for each further term
+    decode *pruned* blocks — the candidate doc-id set is shipped to
+    executors and blocks whose [min_doc, max_doc] window misses all
+    candidates are skipped undecoded (skip-list forward pointers;
+    ``SkipListReader.tryRetainData``); several OR-paths fold their distinct
+    terms through one union + pivot instead;
+  - *exclusion* (= ReverseIndexRejectFilter): ``left_anti`` join;
+  - *ranking*: per-term BM25 partials as JVM column expressions, aggregated
+    over the compiled query's OR-tree as max-over-paths of sum-along-path
+    (``CompiledQueryAggregates.intMaxSumAggregateOfIndexes``), then the
+    ascending ``normalize()`` transform (``IndexResultRankingService.java``);
+  - *select*: ``orderBy(score).limit(k)`` (Spark's TakeOrdered = the top-k
+    heap, ``ResultPriorityQueue``) with an optional per-group result cap
+    (``row_number`` window = per-domain cap, ``IndexQueryExecution.java:162-177``).
+- **wand_rewrite**: block-max WAND is a plan rewrite, not a second
+  executor — execute the plan on each term's best blocks, take the kth
+  score as θ, and return the plan with per-term block-max ``cuts``.
 
+``run_query`` is plan → rewrite → execute; ``run_query_wand``,
+``run_search``, ``run_query_page`` and ``explain_scores`` all go through it.
 The time-budget / early-termination machinery (``IndexSearchBudget``) is
 deliberately omitted: this is a batch engine; block-max metadata + parquet
 min/max stats provide the scan pruning instead (SURVEY §2.6 O4 note).
@@ -30,8 +42,9 @@ min/max stats provide the scan pruning instead (SURVEY §2.6 O4 note).
 from __future__ import annotations
 
 import json
+import math
 import os
-from dataclasses import dataclass
+from dataclasses import dataclass, field, replace
 from functools import partial, reduce
 
 import numpy as np
@@ -43,12 +56,14 @@ from ..functions.blocks import decode_blocks, decoded_schema
 from ..functions.scoring import (
     FLAG_BM25_WEIGHT,
     bm25_partial,
+    document_bonus,
     document_penalty,
     first_position_bonus,
     flags_partial,
     normalize,
     optional_group_bonus,
     proximity_bonus,
+    temporal_bias,
     verbatim_bonus,
 )
 from ..plans.parser import ParsedQuery, parse_query
@@ -263,8 +278,7 @@ class IndexReader:
         # driver-side memo of lexicon/bounds probes: a reader is pinned to
         # one immutable index snapshot, so these tiny lookups never change
         # — the Spark analogue of the reference keeping lexicon B-tree
-        # pages hot in its buffer pool (a WAND query alone probes the
-        # lexicon three times: wrapper + both phases)
+        # pages hot in its buffer pool
         self._stats_cache: dict[tuple, tuple[int, int] | None] = {}
         self._bounds_cache: dict[int, float | None] = {}
         self._searchset_cache: dict[str, DataFrame | None] = {}
@@ -335,7 +349,7 @@ class IndexReader:
         ``lang`` scopes df to one language's lexicon (a word unused in that
         language is 'missing' there, like the reference's per-language
         WordLexicon lookup). Memoized per (lang, word) — the snapshot is
-        immutable, and one WAND query re-probes the same words three times.
+        immutable.
         """
         if not words:
             return {}
@@ -424,97 +438,138 @@ def _safe(word: str) -> str:
     return f"w{zlib.crc32(word.encode()):08x}"
 
 
-def _phrase_filter(cand: DataFrame, phrase: list[str]) -> DataFrame:
-    """Adjacency constraint via JVM array expressions (no Python).
-
-    A phrase t0..tm matches when some base position p has t_i at p+i for all
-    i — the offset-shifted position intersection of the reference
-    (``SequenceOperations.findIntersections``), expressed with
-    ``filter``/``array_contains`` so it stays in whole-stage codegen.
-    """
-    base = F.col(f"pos_{_safe(phrase[0])}")
-    cond = lambda p: reduce(  # noqa: E731
-        lambda acc, i: acc
-        & F.array_contains(F.col(f"pos_{_safe(phrase[i])}"), p + i),
-        range(1, len(phrase)),
-        F.lit(True),
+def _adjacent_count(pos_cols: list[F.Column]) -> F.Column:
+    """How many positions p of the first column have column i holding
+    p+i for every i — the offset-shifted position intersection of the
+    reference (``SequenceOperations.findIntersections``), expressed with
+    ``filter``/``array_contains`` so it stays in whole-stage codegen."""
+    return F.size(
+        F.filter(
+            pos_cols[0],
+            lambda p: reduce(
+                lambda acc, i: acc & F.array_contains(pos_cols[i], p + i),
+                range(1, len(pos_cols)),
+                F.lit(True),
+            ),
+        )
     )
-    return cand.filter(F.size(F.filter(base, cond)) > 0)
 
 
-def run_query(
+def _broadcast_ids(reader: IndexReader, frames: list[DataFrame]):
+    """The candidate-superset broadcast: the union of the frames' doc ids,
+    collected in one job and broadcast sorted (decode_blocks' candidate
+    contract). A broadcast, not a closure capture: at the 2M-id cap this is
+    16 MB shipped once per executor (torrent) instead of once per task of
+    every pruned term scan."""
+    ids = reduce(lambda a, b: a.unionByName(b), [f.select("doc_id") for f in frames])
+    return reader.spark.sparkContext.broadcast(np.unique(_collect_ids_u64(ids)))
+
+
+@dataclass(frozen=True, eq=False)
+class QueryPlan:
+    """Every driver-side decision for one query, taken before any posting
+    is decoded — the reference's ``SearchContext`` plus the query list
+    ``CombinedIndexReader.createQueries`` builds for the Lookup → Dedup →
+    Preparation → Ranking pipeline (SURVEY §3.1). ``execute`` turns a plan
+    into a DataFrame; ``wand_rewrite`` turns one plan into another.
+
+    ``eq=False``: ``tie_break`` is a Column, whose ``==`` builds an
+    expression instead of comparing.
+    """
+
+    pq: ParsedQuery
+    k: int
+    lang: str | None
+    # word → (term_id, df) for every query word; the language's df when
+    # lang-scoped, like n_corpus
+    stats: dict[str, tuple[int, int]]
+    n_corpus: float
+    # include paths whose terms are all in the lexicon; none = empty result
+    live_paths: list[list[str]] = field(default_factory=list)
+    live_terms: list[str] = field(default_factory=list)  # + phrase terms
+    # each live path's terms plus the (mandatory) need_pos terms, rarest
+    # first: element 0 drives the path's candidate generation
+    chains: list[list[str]] = field(default_factory=list)
+    need_pos: frozenset[str] = frozenset()  # terms decoded with positions
+    gate_mask: int = 0  # role flags every matched include term must carry
+    prio_ok: bool = False  # the gate lets ranked scans read the prio tier
+    # conv:/set: doc ids seeding the driver decode; oversized search sets
+    # are semi-joined late instead
+    conv_doc_ids: np.ndarray | None = None
+    set_post_filters: list[DataFrame] = field(default_factory=list)
+    # per-term scan options: the block-max cut (min max_tf_norm) of every
+    # ranked scan; the WAND probe's best-N blocks (single-path driver, or
+    # every OR term); budget_blocks' first-N blocks (single-path driver)
+    cuts: dict[str, float] = field(default_factory=dict)
+    top_blocks: int | None = None
+    first_blocks: int | None = None
+    ranking: RankingParams = RankingParams()
+    group_cap: int | None = None
+    group_col: str | F.Column = "conv_id"
+    round_score_to: int | None = None
+    tie_break: F.Column | None = None
+    blocklist: DataFrame | None = None
+    safe_tier: int = 0
+    strategy: str = "plain"  # "plain" | "wand"
+    reason: str = ""
+
+
+def plan_query(
     reader: IndexReader,
     query: str | ParsedQuery,
     k: int = 10,
-    group_cap: int | None = None,
-    group_col: str = "conv_id",
-    round_score_to: int | None = None,
-    tie_break: F.Column | None = None,
     ranking: RankingParams | None = None,
     budget_blocks: int | None = None,
     lang: str | None = None,
-    blocklist: DataFrame | None = None,
-    safe_tier: int = 0,
-    _driver_top_blocks: int | None = None,
-    _driver_min_tf_norm: dict[str, float] | None = None,
-) -> DataFrame:
-    """Top-k BM25 search. Returns (doc_id, conv_id, score, ...) ascending by
-    the reference's normalized score (lower = better).
-
-    ``tie_break``: optional column expression used instead of ``doc_id`` to
-    break score ties deterministically (e.g. an external id recoverable from
-    ``conv_id`` so results are comparable with an engine that does not know
-    our hash-based doc ids).
-
-    ``budget_blocks``: opt-in approximate mode — only the driver term's
-    first N blocks in doc-id order are scanned. With rank-stamped ids this
-    is the reference's budgeted scan (IndexSearchBudget): truncation is
-    sound because docID order is quality order, so the scanned prefix holds
-    the best documents.
-    """
+    group_cap: int | None = None,
+    **output,
+) -> QueryPlan:
+    """Plan one query: every driver-side decision, before any posting is
+    decoded. Spark actions here are the lexicon probe (memoized per reader)
+    and the ``conv:`` / ``set:`` id resolution. ``output`` carries the
+    result-shaping parameters of ``run_query`` (``group_col``,
+    ``round_score_to``, ``tie_break``, ``blocklist``, ``safe_tier``)."""
     pq = parse_query(query) if isinstance(query, str) else query
     if lang is None:
         lang = pq.lang  # `lang:xx` query syntax; explicit param wins
+    ranking = ranking or RankingParams()
     include_terms = pq.all_include_terms()
-    phrase_terms = sorted({w for ph in pq.phrases for w in ph})
     # lang-scoped queries take df/N from that language's lexicon partition
     # and restrict candidates to its documents (per-language index surface)
     stats = reader.term_stats(
         include_terms + pq.exclude + pq.priority + pq.advice, lang=lang
     )
-    n_corpus = (
-        reader.lang_doc_counts.get(lang, 0.0) if lang is not None else reader.n_docs
+    empty = QueryPlan(
+        pq=pq,
+        k=k,
+        lang=lang,
+        stats=stats,
+        n_corpus=(
+            reader.lang_doc_counts.get(lang, 0.0) if lang is not None else reader.n_docs
+        ),
+        ranking=ranking,
+        group_cap=group_cap,
+        first_blocks=budget_blocks,
+        **output,
     )
 
     # any required include term missing from the lexicon on an AND-only
     # query → empty result; OR paths drop the missing alternatives
     paths = pq.include.paths() if pq.include is not None else [[]]
     live_paths = [p for p in paths if all(w in stats for w in p)]
-    def empty() -> DataFrame:
-        return (
-            reader.doc_stats.select("doc_id", "conv_id", "doc_len", "n_turns")
-            .withColumn("score", F.lit(0.0))
-            .limit(0)
-        )
-
     if not live_paths or not include_terms:
-        return empty()
+        return replace(empty, reason="empty: no include path is in the lexicon")
+    phrase_terms = sorted({w for ph in pq.phrases for w in ph})
     live_terms = sorted({w for p in live_paths for w in p} | set(phrase_terms))
     if any(w not in stats for w in live_terms):
-        return empty()
+        return replace(empty, reason="empty: a phrase term is not in the lexicon")
     # an advisory term absent from the lexicon can match no document —
     # required-but-unranked semantics make the result empty up front
     if any(w not in stats for w in pq.advice):
-        return empty()
-
-    # ---- candidate generation: rarest term drives, per OR-path union ----
-    # For the common single-path (pure AND) case this is one retain chain;
-    # multi-path queries union per-path candidate sets (U1) then dedup (A6).
-    positional = ranking is not None and ranking.positional
-    flag_score = ranking is not None and ranking.flag_score
-    penalties = ranking is not None and ranking.penalties
-    weighted = ranking is not None and ranking.weighted_counts
-    need_pos = set(phrase_terms) | (set(live_terms) if positional else set())
+        return replace(empty, reason="empty: an advisory term is not in the lexicon")
+    need_pos = frozenset(phrase_terms) | (
+        frozenset(live_terms) if ranking.positional else frozenset()
+    )
 
     # role gate (in:system ...) → required flag mask per matched term
     gate_mask = 0
@@ -531,48 +586,16 @@ def run_query(
         and reader.prio is not None
     )
 
-    def term_df(
-        word: str, candidates: np.ndarray | None, is_driver: bool = False
-    ) -> DataFrame:
-        tid = stats[word][0]
-        # min_tf_norm cuts apply to EVERY term's scan (block-max pruning on
-        # each leg of an intersection, SkipListReader.java:87 tryRetainData
-        # + block max); top/first-block budgets stay driver-only
-        out = reader.decode_term(
-            tid,
-            candidates=candidates,
-            with_positions=word in need_pos,
-            with_wtf=weighted,
-            min_tf_norm=(_driver_min_tf_norm or {}).get(word),
-            top_blocks=_driver_top_blocks if is_driver else None,
-            first_blocks=budget_blocks if is_driver else None,
-            tier="prio" if (prio_ok and word not in need_pos) else "full",
-            lang=lang,
-        )
-        cols = [F.col("doc_id"), F.col("tf").alias(f"tf_{_safe(word)}")]
-        if weighted:
-            cols.append(F.col("wtf_q4").alias(f"wtf_{_safe(word)}"))
-        if gate_mask or flag_score:
-            cols.append(F.col("flags").alias(f"flags_{_safe(word)}"))
-        if word in need_pos:
-            cols.append(F.col("positions").alias(f"pos_{_safe(word)}"))
-        return out.select(*cols)
-
     # conv: restrictions (F5 doc-range analogue): resolve conversation ids
     # to doc ids via the forward index (tiny driver probe) and seed the
     # driver term's decode with them — blocks outside the doc-id windows
     # are skipped undecoded (ReverseIndexRetainDocumentRangeFilter)
     conv_doc_ids: np.ndarray | None = None
     if pq.convs:
-        conv_doc_ids = np.sort(
-            _collect_ids_u64(
-                reader.doc_stats.filter(F.col("conv_id").isin(pq.convs)).select(
-                    "doc_id"
-                )
-            )
-        )
+        convs = reader.doc_stats.filter(F.col("conv_id").isin(pq.convs))
+        conv_doc_ids = np.sort(_collect_ids_u64(convs.select("doc_id")))
         if conv_doc_ids.size == 0:
-            return empty()
+            return replace(empty, reason="empty: no conv: id is indexed")
 
     # set:<name> search sets (RankingSearchSet membership): members resolve
     # to doc ids through the forward index and seed the decode like conv:
@@ -598,99 +621,165 @@ def run_query(
             set_post_filters.append(members)
             continue
         ids = np.sort(capped)
-        if ids.size == 0:
-            return empty()
         conv_doc_ids = (
             ids if conv_doc_ids is None else np.intersect1d(conv_doc_ids, ids)
         )
         if conv_doc_ids.size == 0:
-            return empty()
+            return replace(
+                empty, reason=f"empty: set:{set_name} leaves no indexed doc"
+            )
 
-    # the candidate-superset broadcast, if one is made during candidate
-    # generation — reused to prune the exclusion / priority term decodes
-    # below (those joins only care about docs already in the candidate set,
-    # so a head-term ?priority word must not scan its full posting list)
+    strategy, reason = "plain", f"qs strategy {pq.strategy}"
+    if pq.strategy == "wand":
+        # a block-max cut drops a term's score for the cut blocks' docs, so
+        # WAND serves only scores that are sums of per-term BM25 partials
+        blockers = [why for hit, why in (
+            (pq.phrases, "a phrase constraint"),
+            (pq.priority, "a ?priority term"),
+            (group_cap is not None, "group_cap"),
+            (ranking.positional or ranking.flag_score or ranking.penalties
+             or ranking.weighted_counts or ranking.temporal_bias is not None,
+             "ranking beyond BM25"),
+        ) if hit]
+        strategy = "plain" if blockers else "wand"
+        reason = f"wand ineligible: {blockers[0]}" if blockers else reason
+    return replace(
+        empty,
+        live_paths=live_paths,
+        live_terms=live_terms,
+        chains=[
+            sorted(set(p) | need_pos, key=lambda w: (stats[w][1], w))
+            for p in live_paths
+        ],
+        need_pos=need_pos,
+        gate_mask=gate_mask,
+        prio_ok=prio_ok,
+        conv_doc_ids=conv_doc_ids,
+        set_post_filters=set_post_filters,
+        strategy=strategy,
+        reason=reason,
+    )
+
+
+def execute(reader: IndexReader, plan: QueryPlan) -> DataFrame:
+    """Run a plan: candidate generation through top-k. Returns (doc_id,
+    conv_id, doc_len, n_turns, score) ascending by the reference's
+    normalized score (lower = better). Spark actions here are the
+    candidate-superset collects and, for temporal bias, the year-range
+    probe; the caller's action runs the rest."""
+    if not plan.live_paths:
+        return (
+            reader.doc_stats.select("doc_id", "conv_id", "doc_len", "n_turns")
+            .withColumn("score", F.lit(0.0))
+            .limit(0)
+        )
+    pq, stats, lang, need_pos = plan.pq, plan.stats, plan.lang, plan.need_pos
+    ranking = plan.ranking
+    weighted = ranking.weighted_counts
+    drivers = sorted({c[0] for c in plan.chains})
+
+    # the candidate-superset broadcast, once one is made — it prunes the
+    # further include scans, and the exclusion / advice / priority decodes
+    # (those joins only care about docs already in the candidate set, so a
+    # head-term ?priority word must not scan its full posting list)
     cand_bc = None
 
-    def path_candidates(path_terms: list[str]) -> DataFrame:
+    def superset():
+        """The candidate-superset broadcast, built on first need: a doc
+        matching path p contains p's driver, so the drivers' doc ids hold
+        every result. None while the drivers are too big to collect."""
         nonlocal cand_bc
-        ordered = sorted(path_terms, key=lambda w: (stats[w][1], w))
-        driver_word = ordered[0]
-        cand = term_df(driver_word, conv_doc_ids, is_driver=True)
-        cand_ids: np.ndarray | None = None
+        if cand_bc is None and (
+            sum(stats[w][1] for w in drivers) <= MAX_DRIVER_CANDIDATES
+        ):
+            seeds = [scan(w, plan.conv_doc_ids, use="seed") for w in drivers]
+            cand_bc = _broadcast_ids(reader, seeds)
+        return cand_bc
+
+    def scan(word, candidates=None, use="rank", top_blocks=None, first_blocks=None):
+        """The one per-term postings decode. ``use`` is ``rank`` for a
+        scored include term (the columns scoring needs, and the plan's
+        block-max cut on every leg, SkipListReader.java:87), ``seed`` for a
+        path driver's doc ids, or ``filter`` for an exclusion / advice /
+        priority term: full tier, since every occurrence counts, pruned to
+        the candidate superset when the term is big enough for that to pay
+        (tryRejectData's walk is likewise driven by the candidate buffer,
+        SkipListReader.java:248). Include scans read the priority tier
+        under a priority-flag gate unless their positions are needed."""
+        if use == "filter":
+            prune = superset() if stats[word][1] > PRUNE_DF_THRESHOLD else cand_bc
+            return reader.decode_term(stats[word][0], candidates=prune, lang=lang)
+        ranked = use == "rank"
+        return reader.decode_term(
+            stats[word][0],
+            candidates=candidates,
+            with_positions=ranked and word in need_pos,
+            with_wtf=ranked and weighted,
+            min_tf_norm=plan.cuts.get(word) if ranked else None,
+            top_blocks=top_blocks,
+            first_blocks=first_blocks,
+            tier="prio" if (plan.prio_ok and word not in need_pos) else "full",
+            lang=lang,
+        )
+
+    def carried(word: str) -> list[tuple[str, str]]:
+        """(decoded column, per-term alias prefix) pairs scoring reads."""
+        cols = [("tf", "tf")]
+        if weighted:
+            cols.append(("wtf_q4", "wtf"))
+        if plan.gate_mask or ranking.flag_score:
+            cols.append(("flags", "flags"))
+        if word in need_pos:
+            cols.append(("positions", "pos"))
+        return cols
+
+    def term_df(word: str, candidates, is_driver: bool = False) -> DataFrame:
+        out = scan(
+            word,
+            candidates,
+            top_blocks=plan.top_blocks if is_driver else None,
+            first_blocks=plan.first_blocks if is_driver else None,
+        )
+        return out.select(
+            F.col("doc_id"),
+            *[F.col(c).alias(f"{p}_{_safe(word)}") for c, p in carried(word)],
+        )
+
+    # ---- candidate generation: rarest term drives, per OR-path union ----
+    if len(plan.live_paths) == 1:
+        # the common single-path (pure AND) case: one retain chain
+        ordered = plan.chains[0]
+        cand = term_df(ordered[0], plan.conv_doc_ids, is_driver=True)
         # ship the driver's doc ids to the other terms' decode kernels only
         # when those terms' posting lists are big enough that block skipping
         # pays for the extra collect job (at small df a plain join is
         # cheaper; at head-term scale the pruning is the whole ballgame)
-        rest_df = sum(stats[w][1] for w in ordered[1:])
         if (
             len(ordered) > 1
-            and stats[driver_word][1] <= MAX_DRIVER_CANDIDATES
-            and rest_df > PRUNE_DF_THRESHOLD
+            and stats[ordered[0]][1] <= MAX_DRIVER_CANDIDATES
+            and sum(stats[w][1] for w in ordered[1:]) > PRUNE_DF_THRESHOLD
         ):
-            arr = np.sort(_collect_ids_u64(cand.select("doc_id")))
-            # a broadcast, not a closure capture: at the 2M-id cap this is
-            # 16 MB shipped once per executor (torrent) instead of once per
-            # task of every subsequent term scan
-            cand_ids = reader.spark.sparkContext.broadcast(arr)
-            cand_bc = cand_ids
+            cand_bc = _broadcast_ids(reader, [cand])
         for word in ordered[1:]:
-            cand = cand.join(term_df(word, cand_ids), "doc_id", "inner")
-        return cand
-
-    if len(live_paths) == 1:
-        path_set = sorted(set(live_paths[0]) | need_pos)
-        cand = path_candidates(path_set)
+            cand = cand.join(term_df(word, cand_bc), "doc_id", "inner")
     else:
         # multi-path (OR): decode each DISTINCT term exactly once — a term
         # shared by several paths gets one postings scan, not one per path —
         # and fold everything through a single union + pivot aggregation
         # (one shuffle on doc_id replaces the per-path join chains plus the
-        # old union+groupBy(max) dedup)
-        #
-        # candidate pruning: a doc matching path p contains p's rarest term,
-        # so the union of per-path rarest-term doc ids is a superset of all
-        # results — collected once (one job) and broadcast into every
-        # distinct term's decode, which prunes the head terms' block scans
-        # exactly as the single-path retain chain does
-        cand_ids = None
-        drivers = sorted(
-            {
-                min(sorted(set(p) | need_pos), key=lambda w: (stats[w][1], w))
-                for p in live_paths
-            }
+        # old union+groupBy(max) dedup); the candidate superset prunes the
+        # head terms' block scans exactly as the single-path chain does
+        rest_df = sum(stats[w][1] for w in plan.live_terms) - sum(
+            stats[w][1] for w in drivers
         )
-        drv_df = sum(stats[w][1] for w in drivers)
-        rest_df = sum(stats[w][1] for w in live_terms) - drv_df
-        if drv_df <= MAX_DRIVER_CANDIDATES and rest_df > PRUNE_DF_THRESHOLD:
-            id_frames = [
-                reader.decode_term(
-                    stats[w][0],
-                    candidates=conv_doc_ids,
-                    tier="prio" if (prio_ok and w not in need_pos) else "full",
-                    lang=lang,
-                ).select("doc_id")
-                for w in drivers
-            ]
-            ids = reduce(lambda a, b: a.unionByName(b), id_frames)
-            arr = np.unique(_collect_ids_u64(ids))
-            cand_ids = reader.spark.sparkContext.broadcast(arr)
-            cand_bc = cand_ids
-        elif conv_doc_ids is not None:
-            cand_ids = reader.spark.sparkContext.broadcast(conv_doc_ids)
-            cand_bc = cand_ids
+        if rest_df > PRUNE_DF_THRESHOLD:
+            superset()
+        if cand_bc is None and plan.conv_doc_ids is not None:
+            # the conv:/set: ids are a candidate superset too
+            cand_bc = reader.spark.sparkContext.broadcast(plan.conv_doc_ids)
         frames = []
-        for i, w in enumerate(live_terms):
-            tdf = reader.decode_term(
-                stats[w][0],
-                candidates=cand_ids,
-                with_positions=w in need_pos,
-                with_wtf=weighted,
-                min_tf_norm=(_driver_min_tf_norm or {}).get(w),
-                top_blocks=_driver_top_blocks,
-                tier="prio" if (prio_ok and w not in need_pos) else "full",
-                lang=lang,
-            )
+        for i, w in enumerate(plan.live_terms):
+            tdf = scan(w, cand_bc, top_blocks=plan.top_blocks)
             sel = [
                 F.col("doc_id"),
                 F.lit(i).alias("ti"),
@@ -707,143 +796,78 @@ def run_query(
             ]
             frames.append(tdf.select(*sel))
         allt = reduce(lambda a, b: a.unionByName(b), frames)
-        aggs = []
-        for i, w in enumerate(live_terms):
-            tfi = F.when(F.col("ti") == i, F.col("tf"))
-            aggs.append(F.max(tfi).alias(f"tf_{_safe(w)}"))
-            if weighted:
-                aggs.append(
-                    F.max(F.when(F.col("ti") == i, F.col("wtf_q4"))).alias(
-                        f"wtf_{_safe(w)}"
-                    )
-                )
-            if gate_mask or flag_score:
-                aggs.append(
-                    F.max(F.when(F.col("ti") == i, F.col("flags"))).alias(
-                        f"flags_{_safe(w)}"
-                    )
-                )
-            if w in need_pos:
-                aggs.append(
-                    F.max(F.when(F.col("ti") == i, F.col("positions"))).alias(
-                        f"pos_{_safe(w)}"
-                    )
-                )
+        aggs = [
+            F.max(F.when(F.col("ti") == i, F.col(c))).alias(f"{p}_{_safe(w)}")
+            for i, w in enumerate(plan.live_terms)
+            for c, p in carried(w)
+        ]
         cand = allt.groupBy("doc_id").agg(*aggs)
         # retain docs where at least one path matched in full (mirrors the
         # old per-path inner-join chains: need_pos terms are mandatory)
-        def _path_present(p: list[str]) -> F.Column:
+        def _path_present(chain: list[str]) -> F.Column:
             return reduce(
                 lambda a, w: a & F.col(f"tf_{_safe(w)}").isNotNull(),
-                sorted(set(p) | need_pos),
+                sorted(chain),
                 F.lit(True),
             )
 
         cand = cand.filter(
-            reduce(lambda a, p: a | _path_present(p), live_paths, F.lit(False))
+            reduce(lambda a, c: a | _path_present(c), plan.chains, F.lit(False))
         )
 
     # ---- role gate (F8): every matched include term must carry the flags ----
-    if gate_mask:
-        for w in live_terms:
+    if plan.gate_mask:
+        for w in plan.live_terms:
             fc = F.col(f"flags_{_safe(w)}")
             cand = cand.filter(
                 fc.isNull()
-                | (fc.bitwiseAND(F.lit(gate_mask)) == F.lit(gate_mask))
+                | (fc.bitwiseAND(F.lit(plan.gate_mask)) == F.lit(plan.gate_mask))
             )
 
     # ---- exclusion: anti-join (ReverseIndexRejectFilter) ----
-    # the anti/left joins below only care about docs already in the
-    # candidate set, so a head-term exclusion/priority word prunes its
-    # decode against the candidate-superset broadcast instead of scanning
-    # the full posting list (tryRejectData's skip-list walk is likewise
-    # driven by the candidate buffer, SkipListReader.java:248)
-    def _lazy_cand_bc():
-        """Build the candidate broadcast on demand when candidate
-        generation didn't need one (e.g. a single small include term) but
-        a big exclusion/priority term would scan unpruned without it."""
-        nonlocal cand_bc
-        if cand_bc is None:
-            drivers = {
-                min(sorted(set(p) | need_pos), key=lambda w: (stats[w][1], w))
-                for p in live_paths
-            }
-            if sum(stats[w][1] for w in drivers) <= MAX_DRIVER_CANDIDATES:
-                frames = [
-                    reader.decode_term(
-                        stats[w][0], candidates=conv_doc_ids, lang=lang
-                    ).select("doc_id")
-                    for w in sorted(drivers)
-                ]
-                arr = np.unique(
-                    _collect_ids_u64(
-                        reduce(lambda a, b: a.unionByName(b), frames)
-                    )
-                )
-                cand_bc = reader.spark.sparkContext.broadcast(arr)
-        return cand_bc
-
     for word in pq.exclude:
         if word in stats:
-            prune = (
-                _lazy_cand_bc()
-                if stats[word][1] > PRUNE_DF_THRESHOLD
-                else cand_bc
-            )
             cand = cand.join(
-                reader.decode_term(
-                    stats[word][0], candidates=prune, lang=lang
-                ).select("doc_id"),
-                "doc_id",
-                "left_anti",
+                scan(word, use="filter").select("doc_id"), "doc_id", "left_anti"
             )
 
     # ---- advisory terms: semi-join retain (AdviceTerm — required to
     # match, excluded from ranking; QueryParser.java:25, the advice terms
-    # become retain filters but never enter the compiled score). Same
-    # candidate-pruned decode as exclusions: a head advice term skips
-    # blocks outside the candidate superset instead of scanning unpruned.
+    # become retain filters but never enter the compiled score)
     for word in pq.advice:
-        prune = (
-            _lazy_cand_bc()
-            if stats[word][1] > PRUNE_DF_THRESHOLD
-            else cand_bc
-        )
         cand = cand.join(
-            reader.decode_term(
-                stats[word][0], candidates=prune, lang=lang
-            ).select("doc_id"),
-            "doc_id",
-            "left_semi",
+            scan(word, use="filter").select("doc_id"), "doc_id", "left_semi"
         )
 
     # ---- phrase constraints ----
     for ph in pq.phrases:
-        cand = _phrase_filter(cand, ph)
+        cand = cand.filter(
+            _adjacent_count([F.col(f"pos_{_safe(w)}") for w in ph]) > 0
+        )
 
     # ---- doc metadata join + spec limits (ParamMatchingQueryFilter) ----
     cand = cand.join(reader.doc_stats, "doc_id")
-    for members in set_post_filters:
+    for members in plan.set_post_filters:
         # corpus-scale search set: plain (shuffling) semi-join — correct at
         # any set size; the common dimension-sized case was already folded
-        # into the decode seed above
+        # into the decode seed by the plan
         cand = cand.join(members, "doc_id", "left_semi")
     if reader.tombstones is not None:
-        # deleted docs are masked in BOTH WAND phases (each runs through
-        # here), so the phase-1 θ never counts a tombstoned doc — the cut
-        # stays sound after deletions
+        # deleted docs are masked in BOTH WAND phases (each executes
+        # through here), so the probe's θ never counts a tombstoned doc —
+        # the cut stays sound after deletions
         cand = cand.join(F.broadcast(reader.tombstones), "doc_id", "left_anti")
-    if blocklist is not None and safe_tier >= 1:
+    if plan.blocklist is not None and plan.safe_tier >= 1:
         # tiered safety blocklist (NsfwDomainFilter.isBlocked, nsfw-filter/
         # .../domain/NsfwDomainFilter.java:64-74): filter level t blocks
         # every list row with tier <= t; 0 disables. Applied at the same
         # point as tombstones so both WAND phases mask identically and the
-        # phase-1 θ never counts a blocked doc. The list is a vertex-sized
+        # probe's θ never counts a blocked doc. The list is a vertex-sized
         # dim (the reference syncs ~10^4 rows from NSFW_DOMAINS hourly) —
         # broadcast anti-join, no shuffle of the candidate side.
-        blocked = blocklist.where(F.col("tier") <= F.lit(safe_tier)).select(
-            "doc_id"
-        )
+        blocked = plan.blocklist.where(
+            F.col("tier") <= F.lit(plan.safe_tier)
+        ).select("doc_id")
         cand = cand.join(F.broadcast(blocked), "doc_id", "left_anti")
     if lang is not None:
         cand = cand.filter(F.col("lang") == lang)
@@ -877,7 +901,7 @@ def run_query(
             c,
             F.col("doc_len").cast("double"),
             F.lit(df_w),
-            n_corpus,
+            plan.n_corpus,
         )
 
     def flag_partial_col(word: str):
@@ -885,16 +909,16 @@ def run_query(
         return flags_partial(
             F.coalesce(F.col(f"flags_{_safe(word)}"), F.lit(0)),
             F.lit(df_w),
-            n_corpus,
+            plan.n_corpus,
         )
 
     path_sums = []
-    for p in live_paths:
+    for p in plan.live_paths:
         terms_in_path = sorted(set(p))
         s = reduce(
             lambda a, w: a + partial_col(w), terms_in_path, F.lit(0.0)
         )
-        if flag_score:
+        if ranking.flag_score:
             # score_bFlags: the same max-over-paths aggregate over the
             # flag-derived pseudo-counts, at half the BM25 weight
             # (IndexResultRankingService.java:139-141)
@@ -909,7 +933,14 @@ def run_query(
     raw = path_sums[0] if len(path_sums) == 1 else F.greatest(*path_sums)
 
     # ---- positional bonuses (first-position, verbatim, proximity — §5) ----
-    if positional:
+    if ranking.positional:
+
+        def adjacent(words: list[str]) -> F.Column:
+            """In-order occurrences of ``words``; 0 unless all are present."""
+            cols = [F.col(f"pos_{_safe(w)}") for w in words]
+            present = reduce(lambda a, c: a & c.isNotNull(), cols, F.lit(True))
+            return F.when(present, _adjacent_count(cols)).otherwise(F.lit(0))
+
         # the "full group" = include terms in query appearance order
         ordered = [w for w in pq.ordered_include_terms() if w in stats]
         pos_of = {w: F.col(f"pos_{_safe(w)}") for w in ordered}
@@ -922,20 +953,7 @@ def run_query(
         )
         bonuses = first_position_bonus(first_pos)
         if len(ordered) >= 2:
-            base = pos_of[ordered[0]]
-            adj_cond = lambda p: reduce(  # noqa: E731
-                lambda acc, i: acc
-                & F.array_contains(pos_of[ordered[i]], p + i),
-                range(1, len(ordered)),
-                F.lit(True),
-            )
-            all_present = reduce(
-                lambda a, w: a & pos_of[w].isNotNull(), ordered, F.lit(True)
-            )
-            phrase_cnt = F.when(
-                all_present, F.size(F.filter(base, adj_cond))
-            ).otherwise(F.lit(0))
-            bonuses = bonuses + verbatim_bonus(phrase_cnt, len(ordered))
+            bonuses = bonuses + verbatim_bonus(adjacent(ordered), len(ordered))
         if len(ordered) > 2:
             # NB: a two-arg lambda would be treated by F.transform as
             # (element, index) — build single-arg closures per term offset
@@ -967,24 +985,9 @@ def run_query(
                 or any(w not in stats for w in grp)
             ):
                 continue
-            gpos = {w: F.col(f"pos_{_safe(w)}") for w in grp}
-            gbase = gpos[grp[0]]
-
-            def _adj(words_):
-                return lambda p: reduce(
-                    lambda acc, i: acc
-                    & F.array_contains(gpos[words_[i]], p + i),
-                    range(1, len(words_)),
-                    F.lit(True),
-                )
-
-            gpresent = reduce(
-                lambda a, w: a & gpos[w].isNotNull(), grp, F.lit(True)
+            bonuses = bonuses + optional_group_bonus(
+                adjacent(grp), len(grp), full_size
             )
-            gcnt = F.when(
-                gpresent, F.size(F.filter(gbase, _adj(grp)))
-            ).otherwise(F.lit(0))
-            bonuses = bonuses + optional_group_bonus(gcnt, len(grp), full_size)
         raw = raw + bonuses
 
     # priority terms: score bonus when present (reference multiplies by
@@ -993,14 +996,10 @@ def run_query(
     prio_present = [w for w in pq.priority if w in stats]
     if prio_present:
         for w in prio_present:
-            prune = (
-                _lazy_cand_bc()
-                if stats[w][1] > PRUNE_DF_THRESHOLD
-                else cand_bc
-            )
             cand = cand.join(
-                reader.decode_term(stats[w][0], candidates=prune, lang=lang)
-                .select("doc_id", F.lit(1).alias(f"prio_{_safe(w)}")),
+                scan(w, use="filter").select(
+                    "doc_id", F.lit(1).alias(f"prio_{_safe(w)}")
+                ),
                 "doc_id",
                 "left",
             )
@@ -1012,8 +1011,8 @@ def run_query(
         )
         raw = raw * F.exp(n_prio / 5.0)
 
-    t_bias = ranking.temporal_bias if ranking is not None else None
-    if penalties and t_bias is None:
+    t_bias = ranking.temporal_bias
+    if ranking.penalties and t_bias is None:
         # rank bucket lives in the doc id's high bits (ids.py layout)
         rank_col = F.shiftrightunsigned(F.col("doc_id"), 57)
         pen = document_penalty(F.col("doc_len").cast("double"), rank_col)
@@ -1025,12 +1024,10 @@ def run_query(
             raise ValueError(f"unknown temporal_bias {t_bias!r}")
         lo, hi = reader.year_range
         anchor = hi if t_bias == "recent" else lo
-        from ..functions.scoring import document_bonus, temporal_bias
-
         bonus = temporal_bias(
             F.col("year"), anchor, ranking.temporal_bias_weight
         )
-        if penalties:
+        if ranking.penalties:
             rank_col = F.shiftrightunsigned(F.col("doc_id"), 57)
             bonus = (
                 document_bonus(F.col("doc_len").cast("double"), rank_col)
@@ -1041,21 +1038,188 @@ def run_query(
         )
     else:
         scored = cand.withColumn("score", normalize(raw))
-    if round_score_to is not None:
-        scored = scored.withColumn("score", F.round(F.col("score"), round_score_to))
+    if plan.round_score_to is not None:
+        scored = scored.withColumn(
+            "score", F.round(F.col("score"), plan.round_score_to)
+        )
 
     # ---- per-group cap + global top-k (ascending: lower = better) ----
-    tb = F.col("doc_id") if tie_break is None else tie_break
-    if group_cap is not None:
-        w = Window.partitionBy(group_col).orderBy(F.col("score").asc(), tb)
+    tb = F.col("doc_id") if plan.tie_break is None else plan.tie_break
+    if plan.group_cap is not None:
+        w = Window.partitionBy(plan.group_col).orderBy(F.col("score").asc(), tb)
         scored = scored.withColumn("_rn", F.row_number().over(w)).filter(
-            F.col("_rn") <= group_cap
+            F.col("_rn") <= plan.group_cap
         ).drop("_rn")
     return (
         scored.orderBy(F.col("score").asc(), tb)
-        .limit(k)
+        .limit(plan.k)
         .select("doc_id", "conv_id", "doc_len", "n_turns", "score")
     )
+
+
+def wand_rewrite(reader: IndexReader, plan: QueryPlan) -> QueryPlan:
+    """Block-max WAND as a plan rewrite (the north-star's block-max WAND,
+    re-expressed for a batch engine). The rewritten plan returns EXACTLY
+    the input plan's results:
+
+    - **probe**: execute the plan with each term's postings restricted to
+      its highest-``max_tf_norm`` blocks (``top_blocks``), yielding k valid
+      result scores. The kth of them is a *lower bound* θ on the true kth
+      best raw score (it is the kth best of a subset of the true candidate
+      set, with every exclusion/limit filter applied).
+    - **cut**: return the plan with per-term ``cuts``; executing it pushes
+      ``max_tf_norm >= cut`` to each postings parquet scan — any block
+      whose score upper bound cannot reach θ is skipped via row-group
+      column stats, undecoded.
+
+    Eligible shapes (``plan_query`` decides): ANY include tree — single
+    term, pure OR, pure AND, and mixed AND-of-OR (``( a | b ) c``, the
+    expansion engine's default output shape). Exclusions, spec limits and
+    lang scoping are fine — both phases apply them identically; lang-scoped
+    idf/θ use the language's own stats (as the scorer does), while the
+    per-term upper bounds stay the GLOBAL block maxima, an upper bound for
+    any language slice, so the cut is merely conservative.
+
+    The general per-term cut (every enumerated OR-path's retain chain gets
+    block-max skipping in the reference, ``CombinedIndexReader.java:86-203``
+    + ``SkipListReader.java:87``): with ``UB_t = idf_t * global max
+    tf-norm`` (term_bounds table) and ``UB(p) = Σ_{t∈p} UB_t``, a block of
+    term t can hold a top-k doc only if SOME path p ∋ t could reach θ
+    through it::
+
+        idf_t * block_max_tf_norm >= θ - max_{p ∋ t} (UB(p) - UB_t)
+
+    so the scan cut is ``max_tf_norm >= (θ - max_residual_t) / idf_t``.
+    Soundness: if a doc's block is pruned on term t, then EVERY path
+    containing t sums below θ for that doc; a doc whose true best path
+    reaches θ therefore keeps that path un-pruned and scores exactly, and
+    the multi-path pipeline's max-over-surviving-paths is its true score.
+    Pure OR reduces to ``θ / idf_t`` (residual 0), pure AND to the single
+    path's ``θ - Σ_{u≠t} UB_u``.
+
+    When the plan rounds scores (``round_score_to``), θ is inverted from
+    the kth score widened by half a rounding quantum — a doc just below
+    the unrounded kth can round into a tie and win the deterministic
+    tie-break, so the cut must keep it.
+
+    A plan whose strategy is not ``wand`` passes through unchanged; one
+    the cut cannot serve comes back with ``strategy="plain"`` and the
+    reason. At 10^12-turn scale this is the difference between scanning a
+    head term's full posting list and touching a handful of blocks.
+    """
+    if plan.strategy != "wand":
+        return plan
+
+    def plain(reason: str) -> QueryPlan:
+        return replace(plan, strategy="plain", reason=f"wand fallback: {reason}")
+
+    stats, n_corpus, k, live = plan.stats, plan.n_corpus, plan.k, plan.live_terms
+    if n_corpus <= 0:
+        return plain("no documents to take idf from")
+    idfs = {
+        w: math.log(1.0 + (n_corpus - stats[w][1] + 0.5) / (stats[w][1] + 0.5))
+        for w in live
+    }
+    if any(v <= 0 for v in idfs.values()):
+        return plain("a term's idf is not positive")
+    # probe — threshold from each term's best blocks, budgeted from the
+    # index's ACTUAL block geometry (an index built with small blocks needs
+    # proportionally more of them to cover k candidates)
+    n_blocks = max(1, -(-2 * k // reader.block_docs))
+    probe = execute(
+        reader, replace(plan, top_blocks=n_blocks, round_score_to=None)
+    ).collect()
+    if not probe or len(probe) < k:
+        return plain(f"the probe found {len(probe)} < k={k} results")
+    kth_score = probe[-1]["score"]
+    round_to = plan.round_score_to
+    if round_to is not None:
+        # widen to the worst score that could still round-tie with the kth
+        kth_score = round(kth_score, round_to) + 0.5 * 10.0 ** (-round_to)
+    # relative epsilon guards the float round-trip through normalize() —
+    # pruning may only ever be conservative
+    theta_raw = (501.0 / (kth_score * kth_score) - 1.0) * (1.0 - 1e-9)
+    if all(len(set(p)) == 1 for p in plan.live_paths):
+        # pure OR, including a single term (residual would equal θ)
+        cuts = {w: theta_raw / idfs[w] for w in live}
+    else:
+        bounds = reader.term_bounds([stats[w][0] for w in live])
+        if any(stats[w][0] not in bounds for w in live):
+            return plain("a term has no block-max bound")
+        ub = {w: idfs[w] * bounds[stats[w][0]] for w in live}
+        ub_path = [sum(ub[w] for w in set(p)) for p in plan.live_paths]
+        cuts = {}
+        for w in live:
+            # the most forgiving path containing w sets its residual
+            max_resid = max(
+                ub_p - ub[w]
+                for p, ub_p in zip(plan.live_paths, ub_path)
+                if w in p
+            )
+            residual = theta_raw - max_resid
+            if residual > 0:
+                cuts[w] = residual / idfs[w]
+        if not cuts:
+            return plain("no term's residual reaches θ")
+    return replace(plan, cuts=cuts, reason=f"block-max cuts at θ={theta_raw:.6g}")
+
+
+def run_query(
+    reader: IndexReader,
+    query: str | ParsedQuery,
+    k: int = 10,
+    group_cap: int | None = None,
+    group_col: str = "conv_id",
+    round_score_to: int | None = None,
+    tie_break: F.Column | None = None,
+    ranking: RankingParams | None = None,
+    budget_blocks: int | None = None,
+    lang: str | None = None,
+    blocklist: DataFrame | None = None,
+    safe_tier: int = 0,
+) -> DataFrame:
+    """Top-k BM25 search: ``plan_query`` → ``wand_rewrite`` → ``execute``.
+    Returns (doc_id, conv_id, doc_len, n_turns, score) ascending by the
+    reference's normalized score (lower = better).
+
+    The query's ``qs=`` execution-strategy override picks the strategy
+    (``QueryParser.java:238`` QsTerm → ``QueryFactory.java:246-258``
+    parseQueryStrategy; the index applies a non-AUTO strategy via
+    ``setQueryStrategy``, QueryFactory.java:214). Documented divergence:
+    the reference's SENTENCE/TOPIC pick a positional-vs-topic scan; our two
+    strategies are the plain pipeline and block-max WAND, which return
+    EXACT-equal results:
+
+    - ``qs=sentence`` / ``qs=plain`` → plain
+    - ``qs=topic`` / ``qs=wand`` → block-max WAND (plain for shapes WAND
+      can't prune, same results)
+    - ``qs=rf_<role>`` → folded into the role gate by the parser
+      (REQUIRE_FIELD_* analogue) — strategy stays AUTO
+    - anything else → AUTO = plain (reference default)
+
+    ``tie_break``: optional column expression used instead of ``doc_id`` to
+    break score ties deterministically (e.g. an external id recoverable from
+    ``conv_id`` so results are comparable with an engine that does not know
+    our hash-based doc ids).
+
+    ``budget_blocks``: opt-in approximate mode — only the driver term's
+    first N blocks in doc-id order are scanned. With rank-stamped ids this
+    is the reference's budgeted scan (IndexSearchBudget): truncation is
+    sound because docID order is quality order, so the scanned prefix holds
+    the best documents.
+    """
+    plan = plan_query(
+        reader, query, k=k, ranking=ranking, budget_blocks=budget_blocks,
+        lang=lang, group_cap=group_cap, group_col=group_col,
+        round_score_to=round_score_to, tie_break=tie_break,
+        blocklist=blocklist, safe_tier=safe_tier,
+    )
+    return execute(reader, wand_rewrite(reader, plan))
+
+
+# run_query follows the query's ``qs=`` strategy itself; callers that
+# dispatch on it import this name
+run_search = run_query
 
 
 def keyword_positions(
@@ -1128,20 +1292,12 @@ def explain_scores(
     The top-k set is tiny, so its ids collect to the driver and prune
     each term's decode to candidate blocks (same J5 lookup as
     ``keyword_positions``); an absent (doc, term) pair explains as 0.0,
-    matching a term that contributed nothing.
+    matching a term that contributed nothing. Term statistics, language
+    and N come from the query's own plan.
     """
-    from ..functions.scoring import bm25_partial
-
-    pq = parse_query(query) if isinstance(query, str) else query
-    res = run_query(reader, pq, k=k, **kw)
-    lang = kw.get("lang") or pq.lang
-    terms = sorted(set(pq.all_include_terms()))
-    stats = reader.term_stats(terms, lang=lang)
-    n_corpus = (
-        reader.lang_doc_counts.get(lang, 0.0)
-        if lang is not None
-        else reader.n_docs
-    )
+    plan = wand_rewrite(reader, plan_query(reader, query, k=k, **kw))
+    res = execute(reader, plan)
+    stats, lang = plan.stats, plan.lang
     ids = np.sort(
         np.array(
             [r["doc_id"] for r in res.select("doc_id").collect()],
@@ -1149,7 +1305,7 @@ def explain_scores(
         ).astype(np.uint64)
     )
     out = res
-    for w in terms:
+    for w in sorted(set(plan.pq.all_include_terms())):
         # readable factor column for plain words, hash-safe otherwise
         col = f"bm25_{w}" if w.isalnum() else f"bm25_{_safe(w)}"
         if w not in stats or not len(ids):
@@ -1163,7 +1319,7 @@ def explain_scores(
             F.coalesce(F.col(f"_tf_{_safe(w)}").cast("double"), F.lit(0.0)),
             F.col("doc_len").cast("double"),
             F.lit(float(stats[w][1])),
-            n_corpus,
+            plan.n_corpus,
         )
         out = out.withColumn(
             col,
@@ -1243,143 +1399,11 @@ def run_query_wand(
     k: int = 10,
     **kw,
 ) -> DataFrame:
-    """Two-phase block-max top-k (the north-star's block-max WAND,
-    re-expressed for a batch engine) — EXACT same results as ``run_query``:
-
-    - **phase 1** runs the normal pipeline with the term's postings
-      restricted to its highest-``max_tf_norm`` blocks, yielding k valid
-      result scores. The kth of them is a *lower bound* θ on the true kth
-      best raw score (it is the kth best of a subset of the true candidate
-      set, with every exclusion/limit filter applied).
-    - **phase 2** re-runs the full pipeline with the scan predicate
-      ``max_tf_norm >= θ / idf`` pushed to the postings parquet scan — any
-      block whose score upper bound ``idf * max_tf_norm`` cannot reach θ is
-      skipped via row-group column stats, undecoded. A doc only in skipped
-      blocks has raw < θ ≤ true-kth-raw, so it cannot enter the top k.
-
-    Eligible shapes: ANY include tree — single term, pure OR, pure AND,
-    and mixed AND-of-OR (``( a | b ) c``, the expansion engine's default
-    output shape). No phrases / priority / positional ranking / group cap;
-    exclusions and spec limits are fine — both phases apply them
-    identically.
-
-    The general per-term cut (every enumerated OR-path's retain chain gets
-    block-max skipping in the reference, ``CombinedIndexReader.java:86-203``
-    + ``SkipListReader.java:87``): with ``UB_t = idf_t * global max
-    tf-norm`` (term_bounds table) and ``UB(p) = Σ_{t∈p} UB_t``, a block of
-    term t can hold a top-k doc only if SOME path p ∋ t could reach θ
-    through it::
-
-        idf_t * block_max_tf_norm >= θ - max_{p ∋ t} (UB(p) - UB_t)
-
-    so the scan cut is ``max_tf_norm >= (θ - max_residual_t) / idf_t``.
-    Soundness: if a doc's block is pruned on term t, then EVERY path
-    containing t sums below θ for that doc; a doc whose true best path
-    reaches θ therefore keeps that path un-pruned and scores exactly, and
-    the multi-path pipeline's max-over-surviving-paths is its true score.
-    Pure OR reduces to ``θ / idf_t`` (residual 0), pure AND to the single
-    path's ``θ - Σ_{u≠t} UB_u`` — the previous special cases.
-
-    When the caller rounds scores (``round_score_to``), θ is inverted from
-    the kth score widened by half a rounding quantum — a doc just below
-    the unrounded kth can round into a tie and win the deterministic
-    tie-break, so the cut must keep it.
-
-    Ineligible queries fall back to the plain pipeline. At 10^12-turn
-    scale this is the difference between scanning a head term's full
-    posting list and touching a handful of blocks.
-    """
-    import math
-
+    """``run_query`` with the ``qs=wand`` strategy forced: two-phase
+    block-max top-k (``wand_rewrite``), EXACT same results as the plain
+    pipeline; shapes WAND can't prune run plain."""
     pq = parse_query(query) if isinstance(query, str) else query
-    include = pq.all_include_terms()
-    paths = pq.include.paths() if pq.include is not None else []
-    eligible = (
-        len(include) >= 1
-        and bool(paths)
-        and not pq.phrases
-        and not pq.priority
-        and kw.get("group_cap") is None
-        and (
-            kw.get("ranking") is None
-            or not (
-                kw["ranking"].positional
-                or kw["ranking"].flag_score
-                or kw["ranking"].penalties
-                or kw["ranking"].weighted_counts
-                or kw["ranking"].temporal_bias is not None
-            )
-        )
-    )
-    if not eligible:
-        return run_query(reader, pq, k=k, **kw)
-    # lang-scoped queries are eligible too: idf/θ use the language's own
-    # stats (as the scorer does), while the per-term upper bounds stay the
-    # GLOBAL block maxima — an upper bound for any language slice, so the
-    # cut is merely conservative
-    lang = kw.get("lang")
-    if lang is None:
-        lang = pq.lang  # `lang:xx` query syntax (run_query does the same)
-    try:
-        stats = reader.term_stats(include, lang=lang)
-    except ValueError:  # pre-lang index
-        return run_query(reader, pq, k=k, **kw)
-    n_corpus = (
-        reader.lang_doc_counts.get(lang, 0.0) if lang is not None else reader.n_docs
-    )
-    live_paths = [p for p in paths if all(w in stats for w in p)]
-    live = sorted({w for p in live_paths for w in p})
-    if not live or n_corpus <= 0:
-        return run_query(reader, pq, k=k, **kw)
-    pure_or = all(len(set(p)) == 1 for p in live_paths)
-
-    def idf_of(w: str) -> float:
-        df_w = float(stats[w][1])
-        return math.log(1.0 + (n_corpus - df_w + 0.5) / (df_w + 0.5))
-
-    idfs = {w: idf_of(w) for w in live}
-    if any(v <= 0 for v in idfs.values()):
-        return run_query(reader, pq, k=k, **kw)
-    # phase 1 — threshold from each term's best blocks, budgeted from the
-    # index's ACTUAL block geometry (an index built with small blocks needs
-    # proportionally more of them to cover k candidates)
-    n_blocks = max(1, -(-2 * k // reader.block_docs))
-    kw1 = {**kw, "round_score_to": None}
-    probe = run_query(
-        reader, pq, k=k, _driver_top_blocks=n_blocks, **kw1
-    ).collect()
-    if len(probe) < k:
-        return run_query(reader, pq, k=k, **kw)  # tiny list: no cut possible
-    kth_score = probe[-1]["score"]
-    round_to = kw.get("round_score_to")
-    if round_to is not None:
-        # widen to the worst score that could still round-tie with the kth
-        kth_score = round(kth_score, round_to) + 0.5 * 10.0 ** (-round_to)
-    # relative epsilon guards the float round-trip through normalize() —
-    # pruning may only ever be conservative
-    theta_raw = (501.0 / (kth_score * kth_score) - 1.0) * (1.0 - 1e-9)
-    if pure_or:  # includes the single-term case (residual would equal θ)
-        cuts = {w: theta_raw / idfs[w] for w in live}
-    else:
-        bounds = reader.term_bounds([stats[w][0] for w in live])
-        if any(stats[w][0] not in bounds for w in live):
-            return run_query(reader, pq, k=k, **kw)
-        ub = {w: idfs[w] * bounds[stats[w][0]] for w in live}
-        ub_path = [sum(ub[w] for w in set(p)) for p in live_paths]
-        cuts = {}
-        for w in live:
-            # the most forgiving path containing w sets its residual
-            max_resid = max(
-                ub_p - ub[w]
-                for p, ub_p in zip(live_paths, ub_path)
-                if w in p
-            )
-            residual = theta_raw - max_resid
-            if residual > 0:
-                cuts[w] = residual / idfs[w]
-        if not cuts:
-            return run_query(reader, pq, k=k, **kw)  # no pruning possible
-    return run_query(reader, pq, k=k, _driver_min_tf_norm=cuts, **kw)
+    return run_query(reader, replace(pq, strategy="wand"), k=k, **kw)
 
 
 def run_query_page(
@@ -1388,7 +1412,6 @@ def run_query_page(
     page: int = 1,
     page_size: int = 10,
     total_limit: int = 100,
-    use_wand: bool = False,
     **kw,
 ) -> DataFrame:
     """Result pagination — the reference's ``IndexClient.executeQueries``
@@ -1401,37 +1424,7 @@ def run_query_page(
     Spark shape: the gather is the usual ``TakeOrderedAndProject``; the
     slice is ``GlobalLimit``+``Offset`` over the already-``total_limit``-
     sized relation — no extra shuffle, and deeper pages reuse the same
-    plan (pass ``use_wand=True`` to let block-max pruning serve the
-    gather for eligible shapes)."""
-    runner = run_query_wand if use_wand else run_query
-    res = runner(reader, query, k=total_limit, **kw)
+    plan (a ``qs=wand`` query lets block-max pruning serve the gather)."""
+    res = run_query(reader, query, k=total_limit, **kw)
     start = max(0, (page - 1) * page_size)
     return res.offset(start).limit(page_size)
-
-
-def run_search(
-    reader: IndexReader,
-    query: str | ParsedQuery,
-    k: int = 10,
-    **kw,
-) -> DataFrame:
-    """Strategy-dispatching entry point — honors the query's ``qs=``
-    execution-strategy override (``QueryParser.java:238`` QsTerm →
-    ``QueryFactory.java:246-258`` parseQueryStrategy; the index applies a
-    non-AUTO strategy via ``setQueryStrategy``, QueryFactory.java:214).
-
-    Mapping (documented divergence: the reference's SENTENCE/TOPIC pick a
-    positional-vs-topic scan; our two physical strategies are the plain
-    decode pipeline and block-max WAND, which return EXACT-equal results):
-
-    - ``qs=sentence`` / ``qs=plain`` → :func:`run_query`
-    - ``qs=topic`` / ``qs=wand`` → :func:`run_query_wand` (falls back to
-      the plain pipeline for shapes WAND can't prune, same results)
-    - ``qs=rf_<role>`` → folded into the role gate by the parser
-      (REQUIRE_FIELD_* analogue) — strategy stays AUTO
-    - anything else → AUTO = plain pipeline (reference default)
-    """
-    pq = parse_query(query) if isinstance(query, str) else query
-    if pq.strategy == "wand":
-        return run_query_wand(reader, pq, k=k, **kw)
-    return run_query(reader, pq, k=k, **kw)

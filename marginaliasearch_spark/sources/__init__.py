@@ -1,2 +1,2 @@
-"""Table IO (versioned parquet catalog, Iceberg-ready) and deterministic
-transcript corpus generators."""
+"""Deterministic transcript corpus generators and the transcript adapters
+over driver test data."""

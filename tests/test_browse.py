@@ -295,8 +295,8 @@ def test_pagination_wand_gather(spark, built):
         round_score_to=6,
     ).collect()
     wand = run_query_page(
-        reader, "factor2", page=2, page_size=4, total_limit=12,
-        round_score_to=6, use_wand=True,
+        reader, "factor2 qs=wand", page=2, page_size=4, total_limit=12,
+        round_score_to=6,
     ).collect()
     assert [(r["conv_id"], r["score"]) for r in plain] == [
         (r["conv_id"], r["score"]) for r in wand

@@ -132,6 +132,23 @@ def test_recorded_entries_latest_round_wins(tmp_path):
     assert rec == {"y", "z"}, rec  # x regressed in r02; y recovered
 
 
+def test_recorded_entries_orders_rounds_by_number(tmp_path):
+    """r100 is a later round than r99 although it sorts first by filename:
+    its rows must override r99's, in both directions."""
+    import json
+
+    m = _entry_mod()
+    green = {"rows_match": True, "schema_match": True, "hash_match": True,
+             "spark_rows": 5, "oracle_rows": 5, "err": None}
+    red = dict(green, hash_match=False)
+    (tmp_path / "CORRECTNESS_r99.json").write_text(
+        json.dumps({"x": green, "y": red}))
+    (tmp_path / "CORRECTNESS_r100.json").write_text(
+        json.dumps({"x": red, "y": green}))
+    rec = m._recorded_entries(record_dir=str(tmp_path))
+    assert rec == {"y"}, rec  # x regressed in r100; y recovered
+
+
 def test_oracle_outputs_carry_no_decimal_columns():
     """DuckDB widens BIGINT sums to HUGEINT and float literals to
     DECIMAL; those surface to the driver as decimal128 columns whose

@@ -11,6 +11,7 @@ import os
 import sys
 import tempfile
 from contextlib import redirect_stdout
+from dataclasses import replace
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -19,6 +20,8 @@ from marginaliasearch_spark.sources.transcripts import documents_as_transcripts
 from marginaliasearch_spark.operators.index_build import build_index, IndexPaths
 from marginaliasearch_spark.operators.query_exec import (
     IndexReader,
+    execute,
+    plan_query,
     run_query,
     run_search,
 )
@@ -67,11 +70,12 @@ def main() -> None:
         )
     )
 
-    q_wand_and = run_query(
+    q_wand_and = execute(
         reader,
-        "customer query",
-        k=10,
-        _driver_min_tf_norm={"customer": 1.2, "query": 1.1},
+        replace(
+            plan_query(reader, "customer query", k=10),
+            cuts={"customer": 1.2, "query": 1.1},
+        ),
     )
     sections.append(
         (
@@ -86,11 +90,12 @@ def main() -> None:
         )
     )
 
-    q_wand_mixed = run_query(
+    q_wand_mixed = execute(
         reader,
-        "( customer | batch ) query",
-        k=10,
-        _driver_min_tf_norm={"customer": 1.2, "batch": 1.3, "query": 1.1},
+        replace(
+            plan_query(reader, "( customer | batch ) query", k=10),
+            cuts={"customer": 1.2, "batch": 1.3, "query": 1.1},
+        ),
     )
     sections.append(
         (
