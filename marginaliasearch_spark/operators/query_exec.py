@@ -13,7 +13,12 @@ before anything runs:
   chain), resolve role gates and ``conv:``/``set:`` ids, and choose the
   strategy, recording why. The result is a ``QueryPlan``.
 - **execute** turns a plan into one DataFrame DAG:
-  - *lookup* (= EntrySource + ReverseIndexRetainFilter): decode the rarest
+  - *lookup* (= EntrySource + ReverseIndexRetainFilter): a term scan
+    reads only the postings files that can hold the term — the reader's
+    file map, built from the parquet footers' term_id ranges at open, is
+    the analogue of the reference's WordLexicon term → postings offset
+    (``WordLexicon.java:34-41``) — so each decode runs one Python task,
+    not one per split of the whole table. Decode the rarest
     term's posting blocks into candidates, then for each further term
     decode *pruned* blocks — the candidate doc-id set is shipped to
     executors and blocks whose [min_doc, max_doc] window misses all
@@ -46,9 +51,11 @@ import math
 import os
 from dataclasses import dataclass, field, replace
 from functools import partial, reduce
+from urllib.parse import unquote
 
 import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -67,7 +74,7 @@ from ..functions.scoring import (
     verbatim_bonus,
 )
 from ..plans.parser import ParsedQuery, parse_query
-from .index_build import IndexPaths, read_postings
+from .index_build import IndexPaths, read_manifest, read_postings
 from .ingest import PRIORITY_FLAGS, ROLE_FLAG
 
 
@@ -216,6 +223,46 @@ def _collect_ids_u64(df: DataFrame, col: str = "doc_id") -> np.ndarray:
     return np.asarray(arr, dtype=np.int64).astype(np.uint64)
 
 
+def _term_files(root: str, dirs: list[str]) -> list[tuple[float, float, str | None, str]]:
+    """``(min term_id, max term_id, lang, path)`` of every data file under
+    ``dirs`` (a tier root's committed dirs), read from the parquet footers
+    on the driver — no Spark job. Hidden files and dirs are skipped, as
+    Spark's listing skips them. A footer without ``term_id`` stats covers
+    every term; a file with no rows covers none. ``lang`` is the file's
+    ``lang=`` partition value, None when the tier is not lang-partitioned.
+    """
+    out = []
+    for d in dirs:
+        for cur, subdirs, files in os.walk(d, followlinks=True):
+            subdirs[:] = sorted(x for x in subdirs if not x.startswith(("_", ".")))
+            lang = next(
+                (
+                    unquote(seg[len("lang="):])
+                    for seg in os.path.relpath(cur, root).split(os.sep)
+                    if seg.startswith("lang=")
+                ),
+                None,
+            )
+            for fn in sorted(f for f in files if not f.startswith(("_", "."))):
+                path = os.path.join(cur, fn)
+                md = pq.read_metadata(path)
+                if md.num_rows == 0:
+                    continue
+                names = md.schema.names
+                stats = [
+                    md.row_group(g).column(names.index("term_id")).statistics
+                    if "term_id" in names
+                    else None
+                    for g in range(md.num_row_groups)
+                ]
+                if all(st is not None and st.has_min_max for st in stats):
+                    lo, hi = min(st.min for st in stats), max(st.max for st in stats)
+                else:
+                    lo, hi = -math.inf, math.inf
+                out.append((lo, hi, lang, path))
+    return out
+
+
 class IndexReader:
     """Open handle on a built index (lexicon + postings + doc stats)."""
 
@@ -282,6 +329,17 @@ class IndexReader:
         self._stats_cache: dict[tuple, tuple[int, int] | None] = {}
         self._bounds_cache: dict[int, float | None] = {}
         self._searchset_cache: dict[str, DataFrame | None] = {}
+        # the term → postings-file map (the reference's WordLexicon term →
+        # offset): each tier's files with their footer term_id range, so a
+        # term scan lists only the files that can hold the term
+        self._files = {
+            "full": _term_files(
+                paths.postings,
+                [paths.bucket_dir(m["partition_id"]) for m in read_manifest(paths)],
+            ),
+            "prio": _term_files(paths.prio, [paths.prio]) if self.prio is not None else [],
+        }
+        self._scans: dict[tuple[str, ...], DataFrame] = {}
 
     def search_set(self, name: str) -> DataFrame | None:
         """Persisted search set by name (RankingSearchSet load-at-query);
@@ -386,8 +444,16 @@ class IndexReader:
     ) -> DataFrame:
         """One term's postings → (doc_id, tf, flags[, positions]).
 
-        The term_id equality predicate prunes parquet row groups via min/max
-        stats (postings files are written sorted by term_id); the candidate
+        The scan lists only the tier's files whose footer term_id range
+        covers the term (and, lang-scoped, only those under that
+        ``lang=`` dir): the reader's file map is the analogue of the
+        reference's WordLexicon term → postings offset
+        (``WordLexicon.java:34-41``), and it keeps the decode to one
+        Python task per covering file instead of one per split of the
+        whole table. A term no file covers decodes to an empty frame
+        without a scan. Inside those files the term_id equality predicate
+        prunes parquet row groups via min/max stats (postings files are
+        written sorted by term_id); the candidate
         array prunes blocks before decode. ``min_tf_norm`` is the block-max
         WAND cut: blocks whose score upper bound (idf * max_tf_norm) cannot
         reach the current top-k threshold are skipped at the parquet scan
@@ -399,8 +465,23 @@ class IndexReader:
         the reference's budgeted-scan semantics (IndexSearchBudget: a
         truncated scan is sound BECAUSE docID order is quality order).
         """
-        source = self.prio if (tier == "prio" and self.prio is not None) else self.postings
-        blocks = source.filter(F.col("term_id") == term_id)
+        tier = "prio" if (tier == "prio" and self.prio is not None) else "full"
+        source, root = (
+            (self.prio, self.paths.prio)
+            if tier == "prio"
+            else (self.postings, self.paths.postings)
+        )
+        files = tuple(
+            path
+            for lo, hi, flang, path in self._files[tier]
+            if lo <= term_id <= hi and (lang is None or flang in (None, lang))
+        )
+        schema = decoded_schema(with_positions, with_wtf)
+        if not files:
+            # no file of the tier can hold the term (a prio-tier term with
+            # no flagged occurrence): nothing to scan
+            return self.spark.createDataFrame([], schema).drop("term_id")
+        blocks = self._scan(source, root, files).filter(F.col("term_id") == term_id)
         if lang is not None and "lang" in source.columns:
             # postings are written partitioned by the doc's language, so a
             # lang-scoped query prunes whole lang=... directories at the
@@ -426,8 +507,20 @@ class IndexReader:
             with_wtf=with_wtf,
             candidates=candidates,
         )
-        schema = decoded_schema(with_positions, with_wtf)
         return blocks.select(*cols).mapInPandas(fn, schema=schema).drop("term_id")
+
+    def _scan(self, source: DataFrame, root: str, files: tuple[str, ...]) -> DataFrame:
+        """The tier table ``source`` (rooted at ``root``) restricted to
+        ``files`` — same schema and partition columns. Memoized per file
+        tuple: the snapshot is immutable, and a serving process should not
+        build a new file index for every scan."""
+        if files not in self._scans:
+            self._scans[files] = (
+                self.spark.read.schema(source.schema)
+                .option("basePath", root)
+                .parquet(*files)
+            )
+        return self._scans[files]
 
 
 def _safe(word: str) -> str:
@@ -1233,22 +1326,22 @@ def keyword_positions(
     code/index/java/nu/marginalia/index/results/IndexResultScoreCalculator
     .java keyword extraction).
 
-    ``results`` is a run_query output (carries ``conv_id``). The top-k set
-    is tiny, so its ids collect to the driver and prune each term's decode
+    ``results`` is a run_query output (carries ``doc_id`` and
+    ``conv_id``). The top-k set is tiny, so its ``(doc_id, conv_id)``
+    pairs collect to the driver in one job and prune each term's decode
     to the candidate blocks (the J5 candidate→values lookup); absent
     (doc, term) combinations produce no row, matching the reference's
     absent-keyword mask.
     """
-    convs = [r["conv_id"] for r in results.select("conv_id").collect()]
-    ds = reader.doc_stats.filter(F.col("conv_id").isin(convs)).select(
-        "doc_id", "conv_id"
-    )
+    hits = [
+        (r["doc_id"], r["conv_id"])
+        for r in results.select("doc_id", "conv_id").collect()
+    ]
+    ds = reader.spark.createDataFrame(hits, "doc_id long, conv_id string")
     # decode_blocks' candidate contract: sorted uint64 (rank-stamped ids
     # can exceed int63, and the membership mask binary-searches)
     ids = np.sort(
-        np.array([r["doc_id"] for r in ds.collect()], dtype=np.int64).astype(
-            np.uint64
-        )
+        np.array([d for d, _ in hits], dtype=np.int64).astype(np.uint64)
     )
     stats = reader.term_stats(terms)
     outs = []
@@ -1289,22 +1382,21 @@ def explain_scores(
     ``bm25_<term>`` column per include term (that term's BM25 partial in
     that document, rounded) alongside the final score.
 
-    The top-k set is tiny, so its ids collect to the driver and prune
-    each term's decode to candidate blocks (same J5 lookup as
-    ``keyword_positions``); an absent (doc, term) pair explains as 0.0,
-    matching a term that contributed nothing. Term statistics, language
-    and N come from the query's own plan.
+    The top-k set is tiny, so the query runs once: its rows collect to
+    the driver, their ids prune each term's decode to candidate blocks
+    (same J5 lookup as ``keyword_positions``), and the report is built
+    over the collected rows as a local relation. An absent (doc, term)
+    pair explains as 0.0, matching a term that contributed nothing. Term
+    statistics, language and N come from the query's own plan.
     """
     plan = wand_rewrite(reader, plan_query(reader, query, k=k, **kw))
     res = execute(reader, plan)
+    rows = res.collect()
     stats, lang = plan.stats, plan.lang
     ids = np.sort(
-        np.array(
-            [r["doc_id"] for r in res.select("doc_id").collect()],
-            dtype=np.int64,
-        ).astype(np.uint64)
+        np.array([r["doc_id"] for r in rows], dtype=np.int64).astype(np.uint64)
     )
-    out = res
+    out = reader.spark.createDataFrame(rows, res.schema)
     for w in sorted(set(plan.pq.all_include_terms())):
         # readable factor column for plain words, hash-safe otherwise
         col = f"bm25_{w}" if w.isalnum() else f"bm25_{_safe(w)}"

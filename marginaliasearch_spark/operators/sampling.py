@@ -402,6 +402,13 @@ def length_buckets(
     Returns ``(doc_id, n_tokens, bucket)`` with buckets 1-based and sizes
     matching SQL ntile exactly: the first ``N mod k`` buckets get
     ``N div k + 1`` rows, the rest ``N div k``.
+
+    The count cache is released when the returned DataFrame object is
+    garbage collected, so hold that object across the action that uses
+    it: ``lb = length_buckets(docs); lb.filter(...).count()`` reads the
+    cache, while ``length_buckets(docs).filter(...)`` drops the returned
+    object at once, releases the cache before any action runs, and
+    recounts (same result, one more pass over the corpus).
     """
     if n_buckets < 1:
         raise ValueError("need n_buckets >= 1")

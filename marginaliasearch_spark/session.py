@@ -14,6 +14,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(total_bytes: int | None = None) -> str:
+    """Default ``spark.driver.memory``: half of host RAM, capped at 24g, so
+    the driver heap fits the host it runs on. Host RAM is the physical page
+    count (``MemTotal`` on Linux); ``total_bytes`` overrides it."""
+    if total_bytes is None:
+        total_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(total_bytes // 2**21, 24 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "marginaliasearch_spark",
     cores: int | str | None = None,
@@ -25,7 +34,8 @@ def get_spark(
     ``cores``: int N → ``local[N]``; "*" → all cores; None → env
     ``SPARK_GRAFT_CPUS`` or "*".  ``shuffle_partitions`` defaults to
     2× parallelism (good spill/skew balance for local mode; on a real
-    cluster AQE coalesces the excess).
+    cluster AQE coalesces the excess). Driver memory is env
+    ``SPARK_GRAFT_DRIVER_MEM`` or ``default_driver_memory()``.
     """
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -41,7 +51,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
